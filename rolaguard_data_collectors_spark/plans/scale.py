@@ -162,36 +162,39 @@ def detect_skew(df, key: str, top: int = 10, counters: int = 500):
     operator (llm/text.heavy_hitters — O(counters) executor memory, so
     it is safe to run on the 100 TB fact table you are ABOUT to join,
     unlike a full groupBy on the key). Returns (key, freq, rank,
-    share, skewed) where ``skewed`` flags keys holding more than
-    2x a fair partition's share under the session's shuffle
-    partitioning — the keys to route through salted_join (or AQE's
-    skew-join splitting)."""
+    share, skewed) where ``skewed`` flags keys holding more than the
+    session's ``spark.sql.adaptive.skewJoin.skewedPartitionFactor``
+    times the mean rows per distinct key (``n / approx_count_distinct``)
+    — the keys to route through salted_join (or AQE's skew-join
+    splitting). The verdict depends on the data only, not on the
+    host's core count."""
     from pyspark.sql import functions as F
 
     from ..llm.text import heavy_hitters
 
     spark = df.sparkSession
-    n = df.count()
-    from ..catalog import compute_parallelism
-
-    n_part = compute_parallelism(spark)
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"), F.approx_count_distinct(key).alias("d")
+    ).first()
+    n, d = stats["n"], max(stats["d"], 1)
+    factor = float(
+        spark.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
+    )
     # strict=False: the diagnosis cares about HEAVY keys, and any key
-    # with share > 1/(counters+1) is a guaranteed MG survivor — far
-    # below the 2x-fair-share skew threshold this flags. The tail of
-    # the top-N listing is advisory, so the top-k exactness guard
+    # with share > 1/(counters+1) is a guaranteed MG survivor. The tail
+    # of the top-N listing is advisory, so the top-k exactness guard
     # (which a near-uniform key distribution legitimately violates)
     # would reject exactly the healthy-table case.
     hh = heavy_hitters(
         df.select(F.col(key).cast("string").alias("k")), "k", k=top,
         counters=counters, strict=False,
     )
-    fair = 1.0 / max(n_part, 1)
     return hh.select(
         F.col("k").alias(key),
         "freq",
         "rank",
         F.round(F.col("freq") / F.lit(float(n)), 6).alias("share"),
-        (F.col("freq") / F.lit(float(n)) > 2 * fair).alias("skewed"),
+        (F.col("freq") > F.lit(factor * n / d)).alias("skewed"),
     )
 
 

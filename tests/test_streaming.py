@@ -446,6 +446,75 @@ def test_verification_gate_stream_final_state(spark, sf_dir, events_stream_feed)
     assert _rows_set(final, cols) == want
 
 
+class _FakeGroupState:
+    """The ``GroupState`` surface ``_verify_fn`` touches, in-process."""
+
+    def __init__(self):
+        self._v = None
+        self.hasTimedOut = False
+        self.timeouts = []
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, value):
+        self._v = tuple(value)
+
+    def remove(self):
+        self._v = None
+
+    def setTimeoutDuration(self, ms):
+        self.timeouts.append(ms)
+
+
+def test_verify_fn_counters_and_timeout(spark, sf_dir):
+    """Op 37's FAILED_VERIFY branch (BaseCollector.py:43-53), which the
+    engine tests leave unarmed: drive ``_verify_fn`` per key over the
+    events table in three chunks, then fire the timeout. Final counters
+    equal the batch shadow, every chunk re-arms the 600 s timer, and
+    the timed-out call emits one ``timed_out`` row and drops the state."""
+    events = (
+        live.prepare_events_stream(load_table(spark, sf_dir, "events"))
+        .orderBy("ts", "event_id")
+        .toPandas()
+    )
+    finals = {}
+    for uid, grp in events.groupby("user_id", sort=True):
+        state = _FakeGroupState()
+        n = len(grp)
+        chunks = [grp.iloc[n * i // 3 : n * (i + 1) // 3] for i in range(3)]
+        chunks = [c for c in chunks if len(c)]
+        for chunk in chunks:
+            for out in live._verify_fn((uid,), iter([chunk]), state):
+                finals[uid] = out.iloc[-1]
+        assert state.timeouts == [live.VERIFY_TIMEOUT_MS] * len(chunks)
+        state.hasTimedOut = True
+        expired = list(live._verify_fn((uid,), iter(()), state))
+        assert len(expired) == 1 and len(expired[0]) == 1
+        row = expired[0].iloc[0]
+        assert bool(row["timed_out"]) and not bool(row["verified"])
+        assert (row["total_packets"], row["verified_packets"]) == (
+            finals[uid]["total_packets"], finals[uid]["verified_packets"],
+        )
+        assert not state.exists
+    want = {
+        r["user_id"]: (r["total_packets"], r["verified_packets"], r["verified"])
+        for r in batch_shadows.verification_gate(spark, sf_dir).collect()
+    }
+    got = {
+        int(uid): (
+            int(r["total_packets"]), int(r["verified_packets"]), bool(r["verified"])
+        )
+        for uid, r in finals.items()
+    }
+    assert got == want
+
+
 def test_event_time_windows_stream(spark, sf_dir, events_stream_feed):
     ev = _events_stream(spark, events_stream_feed, batch_size=400)
     _run_to_memory(live.tumbling_counts_stream(ev), "st_tumble", "append")
@@ -1006,27 +1075,6 @@ def test_collector_manager_test_probe(spark, tmp_path):
     )
     mgr.handle_event({"type": "TEST", "config": cfg})
     assert [(e.status, e.type) for e in mgr.status_events] == [("TEST", "SUCCESS")]
-
-
-def test_attach_parsed_streaming_ignores_distinct_strategy(spark):
-    """A readStream frame must take the per-row memo path even when
-    the batch DECODE_STRATEGY is 'distinct' — a stream can't
-    dropDuplicates-and-join its own derivative inside a microbatch."""
-    from rolaguard_data_collectors_spark.streaming import normalize as nz
-
-    sdf = (
-        spark.readStream.format("rate").load()
-        .selectExpr("CAST(value AS STRING) AS data")
-    )
-    old = nz.DECODE_STRATEGY
-    nz.DECODE_STRATEGY = "distinct"
-    try:
-        out = nz._attach_parsed(sdf)
-    finally:
-        nz.DECODE_STRATEGY = old
-    assert out.isStreaming
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "Deduplicate" not in plan and "Join" not in plan
 
 
 # --- round 7: adversarial-corpus stream == batch-shadow equivalence -------
